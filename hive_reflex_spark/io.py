@@ -11,7 +11,11 @@ Nothing here collects to the driver.
 
 from __future__ import annotations
 
+import atexit
 import os
+import re
+import shutil
+import tempfile
 from collections import deque
 
 from pyspark.sql import DataFrame, SparkSession
@@ -264,3 +268,38 @@ def load_tables(
     """Read the named fixture tables (all of TABLES when none given)."""
     pin_session(spark)
     return {n: read_table(spark, sf_dir, n) for n in (names or TABLES)}
+
+
+# --- per-process scratch root ---------------------------------------------
+# Every query that round-trips through local files (stream staging, sink
+# round-trips, streaming work dirs, generated model fixtures) works under
+# ONE root owned by this process: nothing is shared across processes, so
+# no path needs a lock, a fingerprint or an atomic publish, and the root
+# goes with the process. TMPDIR picks where the root lives.
+_ROOT_NAME = re.compile(r"hrs_([1-9][0-9]{0,8})")
+_CLAIMED_ROOTS: set[str] = set()
+
+
+def scratch(tag: str) -> str:
+    """``<gettempdir()>/hrs_<pid>/<tag>``: a path (not created) under this
+    process's scratch root. The root is made on first use, removed at
+    exit, and its first use also removes the roots of dead processes."""
+    tmp = tempfile.gettempdir()
+    root = os.path.join(tmp, f"hrs_{os.getpid()}")
+    if root not in _CLAIMED_ROOTS:
+        for entry in os.listdir(tmp):
+            m = _ROOT_NAME.fullmatch(entry)
+            if m is None:
+                continue
+            try:
+                os.kill(int(m.group(1)), 0)
+            except ProcessLookupError:
+                shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
+            except PermissionError:
+                pass  # alive, owned by another user
+        # a dead process's root under a reused pid is not ours to reuse
+        shutil.rmtree(root, ignore_errors=True)
+        os.makedirs(root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _CLAIMED_ROOTS.add(root)
+    return os.path.join(root, tag)

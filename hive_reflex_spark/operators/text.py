@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from hive_reflex_spark.io import (
     chain_checkpoint,
     corpus_checkpoint,
-    maybe_local_checkpoint,
     read_table,
     tracked_persist,
 )
@@ -1005,12 +1004,12 @@ def q100_chunk_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end (register → plan → per-row generate)."""
     docs = read_table(spark, sf_dir, "documents")
     spark.udtf.register("hrs_chunk_docs", chunk_udtf())
-    docs.createOrReplaceTempView("hrs_chunk_src")
     return spark.sql(
         """
         SELECT d.doc_id, c.chunk_idx, c.chunk_text, c.n_words
-        FROM hrs_chunk_src d, LATERAL hrs_chunk_docs(d.text) c
-        """
+        FROM {d} d, LATERAL hrs_chunk_docs(d.text) c
+        """,
+        d=docs,
     )
 
 

@@ -20,8 +20,7 @@ q80a oracle's VALUES table.
 
 from __future__ import annotations
 
-import os
-import tempfile
+from hive_reflex_spark.io import scratch
 
 # --------------------------------------------------------------------------
 # Minimal protobuf wire-format encoder (twin of onnx_source's decoder)
@@ -150,16 +149,8 @@ def write_model(path: str, name: str, spec_nodes: list, inits: dict) -> str:
 
 
 def _model_onnx_path(name: str, spec_nodes: list, inits: dict) -> str:
-    """Write the fixture into the temp dir and return its path. Always
-    rewritten — the bytes are deterministic and cheap, and an
-    unconditional write means a stale file from an older spec version
-    (or another process) can never be parsed in place of the current
-    spec."""
-    path = os.path.join(
-        tempfile.gettempdir(), f"hrs_{name}_{os.getuid()}.onnx"
-    )
-    write_model(path, name, spec_nodes, inits)
-    return path
+    """Write the fixture into the scratch root and return its path."""
+    return write_model(scratch(f"{name}.onnx"), name, spec_nodes, inits)
 
 
 def ir_values(name: str, spec_nodes: list, inits: dict) -> str:
